@@ -8,8 +8,10 @@ import org.apache.spark.sql.types.{DataType, DateType, DecimalType, IntegerType,
 
 /** JDBC warehouse sink — reference `etl/load.py` (SURVEY §2i).
   *
-  * K2 DDL, K3 truncate-reload, K4 batch append, K5 upsert, K6 empty guard,
-  * K7 row-count logging. `Verify` writes parquet instead (SURVEY §7 build
+  * K2 DDL, K3 truncate-reload, K4 batch append, K5 upsert. The K6 empty
+  * guard (`df.isEmpty`, at most one row read) and the K7 row-count logging
+  * (an `observe()` count on each write, no extra job) live in
+  * [[Pipeline.run]]. `Verify` writes parquet instead (SURVEY §7 build
   * plan step 5).
   *
   * Dialect matrix (what runs against a real engine vs. string-level):
@@ -191,10 +193,4 @@ object Load {
       }
     }
   }
-
-  /** K6/K7 — empty guard + count logging without an extra job: use
-    * `df.isEmpty` (reads at most one row) rather than `count()`.
-    */
-  def loadIfNonEmpty(df: DataFrame, doLoad: DataFrame => Unit): Boolean =
-    if (df.isEmpty) false else { doLoad(df); true }
 }
